@@ -1,17 +1,18 @@
-"""Connected-components primitive over distributed edge lists.
+"""Connected-components primitive over distributed edge lists — the
+engine's ONLY connected-components algorithm (`dedup_cluster_cc`,
+`dedup_semantic_cluster_cc` and the pipeline's `near_dedup` all label
+through it).
 
-Contract (shared with the bounded-round min-label loops inside
-``dedup_cluster_cc`` / ``dedup_semantic_cluster_cc``): label every node
-of the undirected edge list with its component's MINIMUM node id.
+Contract: label every node of the undirected edge list with its
+component's MINIMUM node id — the fixpoint the recursive-CTE oracles
+state.
 
 ``cc_star`` is the alternating large-star/small-star algorithm (Kiveris
 et al. 2014, "Connected Components in MapReduce and Beyond"): each round
 is two grouped min-aggregates + joins over the EDGE list, and the edge
 set provably converges to disjoint stars centered at the component
-minima in O(log² n) rounds REGARDLESS of component diameter — which
-retires the failure mode the bounded-round loops can only detect
-(VERDICT r10 "what's missing" #4: a >10-diameter component makes
-min-label propagation raise; this answers instead).
+minima in O(log² n) rounds REGARDLESS of component diameter, so a long
+chain of near-duplicates resolves instead of exhausting a round cap.
 
 The driver-side loop is over ROUNDS (distributed work inside), like
 every other iterative op in the engine; per-round frames are
@@ -26,13 +27,12 @@ from pyspark.sql import DataFrame, functions as F
 #: Safety cap on alternating rounds. The theoretical bound is O(log² n)
 #: and measured convergence on near-clique dup graphs is 2-3 rounds, on
 #: a planted 13-node chain 5 rounds; 60 covers any corpus this engine
-#: can hold (and unlike the min-label cap it is NOT a diameter bound —
-#: hitting it would mean the algorithm itself regressed).
+#: can hold (it is NOT a diameter bound — hitting it would mean the
+#: algorithm itself regressed).
 _STAR_MAX_ROUNDS = 60
 
 
-def cc_star(edges: DataFrame, max_rounds: int = _STAR_MAX_ROUNDS
-            ) -> DataFrame:
+def cc_star(edges: DataFrame) -> DataFrame:
     """Exact connected components of the undirected ``edges`` frame
     (columns ``a``, ``b``; direction/duplication/self-loops are
     normalized away). Returns ``(node, lbl)`` for every node incident
@@ -47,14 +47,18 @@ def cc_star(edges: DataFrame, max_rounds: int = _STAR_MAX_ROUNDS
     alternating them strictly shrinks the potential until the edge set
     is a union of stars centered at component minima.
     """
-    nodes = (edges.select(F.col("a").alias("node"))
-                  .unionByName(edges.select(F.col("b").alias("node")))
+    # The input is evaluated ONCE, into a checkpoint: callers hand in
+    # pair frames whose lineage can hang off a whole index build, and
+    # checkpoint (not cache) truncates that plan tree, so no round
+    # re-stringifies it.
+    canon = (edges.select(F.least("a", "b").alias("a"),
+                          F.greatest("a", "b").alias("b"))
                   .distinct().localCheckpoint())
-    e = (edges.select(F.least("a", "b").alias("a"),
-                      F.greatest("a", "b").alias("b"))
-              .filter(F.col("a") != F.col("b"))
-              .distinct().localCheckpoint())
-    for _ in range(max_rounds):
+    nodes = (canon.select(F.col("a").alias("node"))
+                  .unionByName(canon.select(F.col("b").alias("node")))
+                  .distinct())
+    e = canon.filter(F.col("a") != F.col("b"))
+    for _ in range(_STAR_MAX_ROUNDS):
         # large-star over the bidirectional view; output (m, v) is
         # canonical by construction (m <= u < v)
         d = e.unionByName(e.select(F.col("b").alias("a"),
@@ -82,9 +86,10 @@ def cc_star(edges: DataFrame, max_rounds: int = _STAR_MAX_ROUNDS
             break
     else:
         raise RuntimeError(
-            f"cc_star: star rounds did not converge within {max_rounds} "
-            f"rounds — the O(log² n) bound is violated, which indicates "
-            f"an algorithmic regression, not a data property")
+            f"cc_star: star rounds did not converge within "
+            f"{_STAR_MAX_ROUNDS} rounds — the O(log² n) bound is "
+            f"violated, which indicates an algorithmic regression, not a "
+            f"data property")
     return (nodes.join(e.select(F.col("b").alias("node"),
                                 F.col("a").alias("lbl"))
                         .groupBy("node").agg(F.min("lbl").alias("lbl")),

@@ -20,8 +20,8 @@ the same machinery its registered operator grades:
 - exact dedup: md5(lower(trim(text))) hash-group (`dedup_exact_text`'s
   normalization, min-doc_id keeper)
 - near-dedup: MinHash band candidates -> jaccard >= 0.5 verify ->
-  min-label CC -> keep the longest doc per cluster
-  (`dedup_near_minhash` + `dedup_cluster_cc`)
+  connected components (`cc.cc_star`) -> keep the longest doc per
+  cluster (`dedup_near_minhash`'s pairs, `dedup_cluster_cc`'s labels)
 - quality gates: token-count/repetition heuristics, then the
   distant-supervised NB scorer (`text_quality_model`)
 - split: stable hash bucket (`sample_split_temporal` discipline)
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..api import DUCK_H32, strip_boilerplate_lines
+from ..cc import cc_star
 from ..registry import op
 from ..sources.io import load
 from .similarity import (
@@ -43,16 +44,14 @@ from .similarity import (
 )
 from .text import (
     _DECONTAM_EVAL_MOD, _DECONTAM_MIN_SHARED, _DUCK_SHINGLES,
-    _MINHASH_BANDS, _MINHASH_K, _PACK_BUDGET, _PACK_SHARDS,
+    _MINHASH_BANDS, _MINHASH_K, _NEAR_DUP_TAU, _PACK_BUDGET, _PACK_SHARDS,
     _SHINGLE_DF_CAP_FLOOR, _SHINGLE_DF_CAP_FRAC, _duck_qm_prefix, _h32,
-    _minhash_bands, _pack_pdf, _quality_model_frame, _shingles,
+    _minhash_bands, _minhash_pairs, _pack_pdf, _quality_model_frame,
+    _shingles,
 )
 
 #: Validation share of the deterministic hash split (percent).
 _SPLIT_VAL_PCT = 10
-
-#: Near-dup verification threshold (jaccard over 3-gram word shingles).
-_NEAR_TAU = 0.5
 
 #: Heuristic gate dials: minimum whitespace tokens, maximum repetition
 #: (1 - type/token ratio).
@@ -86,65 +85,14 @@ def exact_dedup(d: DataFrame) -> DataFrame:
 
 def near_dedup(d: DataFrame) -> DataFrame:
     """MinHash-LSH near-dup clusters -> keep the LONGEST doc per cluster
-    (ties -> lowest doc_id). The edge list is banded candidates verified
-    at jaccard >= ``_NEAR_TAU``; clustering is min-label propagation
-    over that (tiny) edge list to a CHECKED fixpoint — the
-    `dedup_cluster_cc` discipline, including the ADVICE-r9 raise on
-    non-convergence."""
+    (ties -> lowest doc_id). The edge list is `dedup_near_minhash`'s
+    verified pairs (banded candidates at jaccard >= ``_NEAR_DUP_TAU``);
+    clusters are their undirected connected components, labeled by
+    `cc.cc_star` like `dedup_cluster_cc`."""
     tok = _shingles(d).withColumnRenamed("s", "token")
-    bands = _minhash_bands(tok)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.sig") == F.col("b.sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("d1"),
-                     F.col("b.doc_id").alias("d2")).distinct())
-    sizes = tok.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ta = tok.select(F.col("doc_id").alias("d1"), "token")
-    tb = tok.select(F.col("doc_id").alias("_d2"),
-                    F.col("token").alias("token2"))
-    common = (cand.join(ta, "d1")
-                  .join(tb, (F.col("d2") == F.col("_d2"))
-                        & (F.col("token") == F.col("token2")))
-                  .groupBy("d1", "d2").agg(F.count("*").alias("c")))
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    jac = (F.col("c").cast("double")
-           / (F.col("n1") + F.col("n2") - F.col("c")))
-    # localCheckpoint (not just cache) — the iterative-pipeline lesson:
-    # each propagation round otherwise nests the full edge lineage
-    # again (measured ~16 s of pure driver-side Catalyst time per
-    # action at sf0.01); checkpointing truncates round r's plan to one
-    # join over two tiny materialized frames.
-    edges = (common.join(F.broadcast(s1), "d1")
-                   .join(F.broadcast(s2), "d2")
-                   .filter(jac >= _NEAR_TAU).select("d1", "d2")
-                   .localCheckpoint())
-
-    lbl = (edges.select(F.col("d1").alias("doc_id"),
-                        F.col("d1").alias("lbl"))
-                .unionAll(edges.select(F.col("d2").alias("doc_id"),
-                                       F.col("d1").alias("lbl")))
-                .groupBy("doc_id").agg(F.min("lbl").alias("lbl"))
-                .localCheckpoint())
-    for _ in range(10):
-        prop = (edges.join(lbl.withColumnRenamed("doc_id", "d1")
-                              .withColumnRenamed("lbl", "l1"), "d1")
-                     .select(F.col("d2").alias("doc_id"),
-                             F.col("l1").alias("lbl"))
-                     .unionAll(lbl))
-        new = (prop.groupBy("doc_id").agg(F.min("lbl").alias("lbl"))
-                   .localCheckpoint())
-        changed = (new.alias("n").join(lbl.alias("o"), "doc_id")
-                      .filter(F.col("n.lbl") != F.col("o.lbl"))
-                      .limit(1).count())
-        lbl = new
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            "near_dedup: min-label propagation did not reach a fixpoint "
-            "within the round cap (component diameter > 10)")
+    pairs = _minhash_pairs(tok, _minhash_bands(tok)).select(
+        F.col("doc1").alias("a"), F.col("doc2").alias("b"))
+    lbl = cc_star(pairs).select(F.col("node").alias("doc_id"), "lbl")
 
     member = d.join(lbl, "doc_id", "left").withColumn(
         "lbl", F.coalesce("lbl", "doc_id"))
@@ -332,7 +280,7 @@ pairs AS MATERIALIZED (
     JOIN sizes s1 ON s1.doc_id = v.doc1
     JOIN sizes s2 ON s2.doc_id = v.doc2
     WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common)
-          >= {_NEAR_TAU}
+          >= {_NEAR_DUP_TAU}
 ), edges AS MATERIALIZED (
     SELECT doc1 AS a, doc2 AS b FROM pairs
     UNION SELECT doc2, doc1 FROM pairs

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
+from ..cc import cc_star
 from ..registry import REGISTRY, op
 from ..sources.io import load
 
@@ -4694,34 +4695,6 @@ def dedup_semantic_incremental(spark: SparkSession,
                                   _SEMDEDUP_TAU)
 
 
-def _semantic_cc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cosine >= τ sub-cell pair graph (v1 < v2), eagerly
-    localCheckpointed — shared by the bounded-round CC and its star
-    twin. Checkpoint, NOT cache: the pair graph hangs off the FULL
-    two-level index tree (unlike the MinHash CC's compact shingle
-    lineage), and per-round CC lineage compounding over it reproduced
-    the vanilla-1g-driver plan-stringify OOM `_twolevel_from_cells`
-    hit; the checkpoint truncates to a leaf, and the frame is
-    duplicate-population-sized (tiny next to the corpus)."""
-    e = load(spark, sf_dir, "embeddings")
-    sub = _semantic_memo(spark, sf_dir, "batch",
-                         lambda: _twolevel_cells(e, _SEMDEDUP_OCC))
-    nrm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
-    a = sub.select(F.col("vec_id").alias("v1"),
-                   F.col("embedding").alias("aemb"), "cid", "scid",
-                   nrm.alias("_na"))
-    b = sub.select(F.col("vec_id").alias("v2"),
-                   F.col("embedding").alias("bemb"), "cid", "scid",
-                   nrm.alias("_nb"))
-    return (a.join(b, ["cid", "scid"])
-             .where(F.col("v1") < F.col("v2"))
-             .withColumn("c", _dot(F.col("aemb"), F.col("bemb"))
-                         / (F.col("_na") * F.col("_nb")))
-             .where(F.col("c") >= F.lit(_SEMDEDUP_TAU))
-             .select("v1", "v2")
-             .localCheckpoint())
-
-
 @op("dedup_semantic_cluster_cc", oracle=f"""
 WITH RECURSIVE {_duck_twolevel_prefix()},
 spairs AS (
@@ -4751,78 +4724,42 @@ def dedup_semantic_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps one representative PER CLUSTER, which needs the component,
     not the pairwise keeper).
 
-    Same bounded-round min-label propagation as the MinHash CC
-    (duplicate clusters are near-cliques inside a sub-cell, so the
-    fixpoint lands in ~2 rounds; the driver loop is over ROUNDS with a
-    distributed fixpoint check, never rows); the DuckDB oracle reaches
-    the identical fixpoint by a recursive CTE. The pair graph reuses
-    the MEMOIZED two-level index frame, so running drop list + clusters
-    together builds the index once.
+    Labels come from `cc.cc_star` (large-star/small-star, O(log² n)
+    rounds regardless of component diameter — sub-cells can hold up to
+    the envelope-bound vector count, so a long chain is possible in
+    principle); the DuckDB oracle reaches the identical fixpoint by a
+    recursive CTE. The pair graph reuses the MEMOIZED two-level index
+    frame, so running drop list + clusters together builds the index
+    once. Also registered as `dedup_semantic_cluster_cc_star`.
 
     Scale shape: the edge list is the (cid, scid)-keyed candidate set —
-    ~n·occ bounded since r9, never all-pairs; each round is one
-    edge-keyed join + one min-aggregate over the (duplicate-population-
-    sized, much smaller than corpus) label frame."""
-    pairs = _semantic_cc_pairs(spark, sf_dir)
-    edges = (pairs.unionByName(pairs.select(F.col("v2").alias("v1"),
-                                            F.col("v1").alias("v2")))
-                  .withColumnsRenamed({"v1": "a", "v2": "b"})
-                  .localCheckpoint())
-    labels = (edges.select(F.col("a").alias("node")).distinct()
-                   .withColumn("lbl", F.col("node")).localCheckpoint())
-    for _ in range(10):  # cap; real exit is the fixpoint check below
-        prop = (edges.join(labels, edges.a == labels.node)
-                     .groupBy(F.col("b").alias("node"))
-                     .agg(F.min("lbl").alias("nbr_lbl")))
-        new = (labels.join(prop, "node", "left")
-                     .select("node", F.least(
-                         "lbl", F.coalesce("nbr_lbl", "lbl")).alias("lbl"))
-               ).localCheckpoint()
-        changed = (new.alias("n").join(labels.alias("o"), "node")
-                      .filter(F.col("n.lbl") != F.col("o.lbl"))
-                      .limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # ADVICE r9: sub-cells can hold up to the envelope-bound vector
-        # count, so a component with diameter > the round cap is
-        # possible in principle — diverge LOUDLY from the recursive-CTE
-        # oracle's guaranteed fixpoint instead of returning wrong labels.
-        raise RuntimeError(
-            "dedup_semantic_cluster_cc: min-label propagation did not "
-            "reach a fixpoint within the round cap (diameter > 10)")
-    return labels.select(F.col("node").alias("vec_id"),
-                         F.col("lbl").alias("cluster_id"))
-
-
-@op("dedup_semantic_cluster_cc_star",
-    oracle=REGISTRY["dedup_semantic_cluster_cc"].oracle,
-    tier=3, section="2.37")
-def dedup_semantic_cluster_cc_star(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """DIAMETER-INDEPENDENT twin of `dedup_semantic_cluster_cc`
-    (VERDICT r10 missing #4): the same cosine >= τ sub-cell components
-    labeled by min vec_id, via alternating large-star/small-star
-    (`cc.cc_star`) — O(log² n) rounds regardless of component diameter,
-    retiring the bounded-round cap's loud-failure mode (sub-cells can
-    hold up to the envelope bound, so a >10-diameter chain is possible
-    in principle; the MinHash-family twin pins exactly that corpus).
-    Shares `_semantic_cc_pairs` (and through it the MEMOIZED two-level
-    index) with the bounded-round op, so running both costs one index
-    build; value-identical wherever both converge, and the DuckDB
-    oracle is the bounded-round op's recursive CTE VERBATIM.
-
-    Scale shape: per star round two grouped min-aggregates + joins
-    over the duplicate-population-sized edge list, eagerly
-    checkpointed — same per-round cost as min-label, shape-independent
-    round count."""
-    from ..cc import cc_star
-
-    pairs = _semantic_cc_pairs(spark, sf_dir).select(
-        F.col("v1").alias("a"), F.col("v2").alias("b"))
+    ~n·occ bounded since r9, never all-pairs; each star round is two
+    grouped min-aggregates + joins over the (duplicate-population-
+    sized, much smaller than corpus) edge list."""
+    e = load(spark, sf_dir, "embeddings")
+    sub = _semantic_memo(spark, sf_dir, "batch",
+                         lambda: _twolevel_cells(e, _SEMDEDUP_OCC))
+    nrm = F.sqrt(_dot(F.col("embedding"), F.col("embedding")))
+    a = sub.select(F.col("vec_id").alias("a"),
+                   F.col("embedding").alias("aemb"), "cid", "scid",
+                   nrm.alias("_na"))
+    b = sub.select(F.col("vec_id").alias("b"),
+                   F.col("embedding").alias("bemb"), "cid", "scid",
+                   nrm.alias("_nb"))
+    pairs = (a.join(b, ["cid", "scid"])
+              .where(F.col("a") < F.col("b"))
+              .where(_dot(F.col("aemb"), F.col("bemb"))
+                     / (F.col("_na") * F.col("_nb"))
+                     >= F.lit(_SEMDEDUP_TAU))
+              .select("a", "b"))
     return cc_star(pairs).select(F.col("node").alias("vec_id"),
                                  F.col("lbl").alias("cluster_id"))
+
+
+#: Its own key (SURVEY.md §2.37 row), the same function.
+op("dedup_semantic_cluster_cc_star",
+   oracle=REGISTRY["dedup_semantic_cluster_cc"].oracle,
+   tier=3, section="2.37")(dedup_semantic_cluster_cc)
 
 
 #: `sim_twolevel_recall_eval` runs the split at occ=8 — the simulated

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..api import (hash32, minhash_band_signatures, strip_boilerplate_lines,
                    word_shingles)
+from ..cc import cc_star
 from ..registry import REGISTRY, op
 from ..sources.io import load
 
@@ -501,6 +502,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MINHASH_K = 16       # signature length
 _MINHASH_BANDS = 4    # 4 bands x 4 rows: catches jaccard >~ 0.7
+#: Near-dup verification threshold: 3-gram word-shingle jaccard at or
+#: above it makes a band-colliding pair a near-dup (`dedup_near_minhash`
+#: and the corpus pipeline's near-dedup stage).
+_NEAR_DUP_TAU = 0.5
 
 
 def _minhash_bands(tok: DataFrame) -> DataFrame:
@@ -544,7 +549,7 @@ SELECT v.doc1, v.doc2,
 FROM verified v
 JOIN sizes s1 ON s1.doc_id = v.doc1
 JOIN sizes s2 ON s2.doc_id = v.doc2
-WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common) >= 0.5
+WHERE CAST(v.common AS DOUBLE) / (s1.n + s2.n - v.common) >= {_NEAR_DUP_TAU}
 """, tier=2, section="2.11")
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup detection, the scale path for dedup:
@@ -595,7 +600,7 @@ def _minhash_pairs(tok: DataFrame, bands: DataFrame) -> DataFrame:
            / (F.col("n1") + F.col("n2") - F.col("common")))
     return (
         verified.join(F.broadcast(s1), "doc1").join(F.broadcast(s2), "doc2")
-                .filter(jac >= 0.5)
+                .filter(jac >= _NEAR_DUP_TAU)
                 .select("doc1", "doc2", F.round(jac, 6).alias("jaccard"))
     )
 
@@ -718,58 +723,25 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     component's min doc_id — the form a dedup pipeline actually consumes
     (keep cluster_id, drop the rest).
 
-    The iterative algorithm of the suite: min-label propagation, each
-    round one join + one min-aggregate over the (tiny) edge list, looping
-    until a fixpoint (no label changed). Dup clusters are near-cliques,
-    so it converges in ~2 rounds; the driver-side loop is over ROUNDS
-    (distributed work inside), not rows. The DuckDB oracle reaches the
-    same fixpoint by a genuinely different route — a recursive CTE.
-    """
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
-    bidir = pairs.unionByName(
-        pairs.select(F.col("doc2").alias("doc1"),
-                     F.col("doc1").alias("doc2"))
-    ).withColumnsRenamed({"doc1": "a", "doc2": "b"})
-    # Self-loop-augmented edges make each round a SINGLE join-aggregate
-    # referencing the labels frame ONCE (round 11): min over
-    # Γ(b) ∪ {b} == least(own, min neighbor) -- value-identical to
-    # the old two-reference least/coalesce form, but the analyzed plan
-    # now grows LINEARLY in rounds instead of doubling per round.
-    # Per-round localCheckpoint (round 12, VERDICT r11 #1): cache()
-    # materializes EXECUTION but not the PLAN TREE, so a graph that
-    # actually uses the round budget (the planted 13-doc chain in
-    # tests/test_wave_r11.py) still compounded ~10 nested copies of the
-    # jaccard lineage into one logical plan and died stringifying it in
-    # a warm session. localCheckpoint truncates lineage each round —
-    # exactly the semantic twin's discipline (similarity.py
-    # dedup_semantic_cluster_cc) and cc.py's.
-    edges = bidir.unionByName(
-        bidir.select("a", F.col("a").alias("b")).distinct()
-    ).localCheckpoint()
-    labels = edges.select(F.col("a").alias("node")).distinct() \
-                  .withColumn("lbl", F.col("node")).localCheckpoint()
-    for _ in range(10):  # cap; real exit is the fixpoint check below
-        new = (
-            edges.join(labels, edges.a == labels.node)
-                 .groupBy(F.col("b").alias("node"))
-                 .agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint()
-        changed = (
-            new.alias("n").join(labels.alias("o"), "node")
-               .filter(F.col("n.lbl") != F.col("o.lbl")).limit(1).count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # ADVICE r9: a component with diameter > the round cap would
-        # otherwise return silently-wrong labels while the recursive-CTE
-        # oracle converges -- non-convergence must fail loudly instead.
-        raise RuntimeError(
-            "dedup_cluster_cc: min-label propagation did not reach a "
-            "fixpoint within the round cap (component diameter > 10)")
-    return labels.select(F.col("node").alias("doc_id"),
-                         F.col("lbl").alias("cluster_id"))
+    Labels come from the alternating large-star/small-star algorithm
+    (`cc.cc_star`): O(log² n) rounds regardless of component diameter,
+    so a long sliding-overlap chain resolves like a near-clique (pinned
+    on a planted 13-doc chain in tests/test_wave_r11.py). The DuckDB
+    oracle reaches the same fixpoint by a genuinely different route — a
+    recursive CTE. Also registered as `dedup_cluster_cc_star`.
+
+    Scale shape: the edge list is the verified pair set (duplicate-
+    population-sized); each star round is two grouped min-aggregates +
+    joins over it with eagerly checkpointed edge-sized frames."""
+    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
+        F.col("doc1").alias("a"), F.col("doc2").alias("b"))
+    return cc_star(pairs).select(F.col("node").alias("doc_id"),
+                                 F.col("lbl").alias("cluster_id"))
+
+
+#: Its own key (SURVEY.md §2.37 row), the same function.
+op("dedup_cluster_cc_star", oracle=REGISTRY["dedup_cluster_cc"].oracle,
+   tier=3, section="2.37")(dedup_cluster_cc)
 
 
 @op("text_unigram_logprob", oracle="""
@@ -3447,36 +3419,6 @@ def doc_pack_nextfit_merged(spark: SparkSession,
                        F.sum("n_tok").alias("tok_sum"),
                        F.round(F.sum("n_tok").cast("double") / _PACK_BUDGET,
                                6).alias("fill")))
-
-
-@op("dedup_cluster_cc_star",
-    oracle=REGISTRY["dedup_cluster_cc"].oracle,
-    tier=3, section="2.37")
-def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DIAMETER-INDEPENDENT twin of `dedup_cluster_cc` (VERDICT r10
-    missing #4): the same jaccard >= 0.5 near-dup components labeled by
-    min doc_id, computed by the alternating large-star/small-star
-    algorithm (`cc.cc_star`) instead of bounded-round min-label
-    propagation — converging in O(log² n) rounds regardless of
-    component diameter, so the >10-diameter chain that makes the
-    bounded-round op FAIL LOUDLY (correct detection, ADVICE r9) simply
-    resolves here (both behaviors pinned side-by-side on a planted
-    13-doc sliding-overlap chain in tests/test_wave_r11.py; on every
-    corpus where both converge the outputs are value-identical, and
-    the DuckDB oracle is the bounded-round op's recursive CTE
-    VERBATIM — same fixpoint, different route).
-
-    Scale shape: the edge list is the post-LSH-verify pair set
-    (duplicate-population-sized); each star round is two grouped
-    min-aggregates + joins over it with eagerly checkpointed
-    edge-sized frames — the same per-round cost as min-label, for a
-    round count that no longer depends on graph shape."""
-    from ..cc import cc_star
-
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select(
-        F.col("doc1").alias("a"), F.col("doc2").alias("b"))
-    return cc_star(pairs).select(F.col("node").alias("doc_id"),
-                                 F.col("lbl").alias("cluster_id"))
 
 
 # ==========================================================================
